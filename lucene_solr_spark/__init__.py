@@ -22,6 +22,16 @@ No per-row Python anywhere on a hot path.
 
 __version__ = "0.1.0"
 
+import sys
+
+if sys.version_info < (3, 12):
+    # every Python worker that unpickles an engine closure imports this
+    # package: from then on its per-task importlib.invalidate_caches()
+    # stops re-reading unchanged zip archives (see worker_runtime)
+    from lucene_solr_spark import worker_runtime
+
+    worker_runtime.install()
+
 from lucene_solr_spark.analyzer import TOKEN_PATTERN, tokenize_pandas, tokens_col
 
 __all__ = ["TOKEN_PATTERN", "tokenize_pandas", "tokens_col", "__version__"]

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from lucene_solr_spark.query.model import BooleanSpec
 from lucene_solr_spark.query.parser import edismax, parse
+from lucene_solr_spark.session import local_frame
 
 #: params this handler understands — anything else is a hard error
 #: (Solr rejects unknown critical params rather than guessing)
@@ -2025,7 +2026,8 @@ def _date_range_buckets(
         i += 1
         if i > 100_000:
             raise ValueError("facet.range on ts: too many buckets")
-    bdf = searcher.spark.createDataFrame(
+    bdf = local_frame(
+        searcher.spark,
         bounds, "lo timestamp, hi timestamp")
     c = F.col(fld)
     return (
@@ -2124,7 +2126,7 @@ def select(searcher, params: dict, stored: DataFrame | None = None) -> dict:
         # materialize the bounded page inside the budget so partiality
         # is decided here, not at some later caller-side collect
         rows = resp.collect()
-        out["response"] = searcher.spark.createDataFrame(rows, resp.schema)
+        out["response"] = local_frame(searcher.spark, rows, resp.schema)
         # cancelJobGroup only aborts ACTIVE jobs — a cancel landing
         # between two jobs lets the rest run to completion. The
         # contract stays honest: budget elapsed ⇒ flagged, even when
@@ -2136,7 +2138,8 @@ def select(searcher, params: dict, stored: DataFrame | None = None) -> dict:
         if not fired[0]:
             raise  # a real error, not the budget
         return {
-            "response": searcher.spark.createDataFrame(
+            "response": local_frame(
+                searcher.spark,
                 [], "conv_id string, turn_idx int, score double"
             ),
             "numFound": 0,
@@ -2195,7 +2198,8 @@ def _select_impl(
                 )
             else:
                 next_mark = params["cursorMark"]
-            page_df = searcher.spark.createDataFrame(
+            page_df = local_frame(
+                searcher.spark,
                 page_rows, page.schema
             )
             return {
@@ -2214,7 +2218,8 @@ def _select_impl(
             # exhausted: Solr signals the end by echoing the request's
             # mark back unchanged
             next_mark = params["cursorMark"]
-        page_df = searcher.spark.createDataFrame(
+        page_df = local_frame(
+            searcher.spark,
             [(r.conv_id, r.turn_idx, r.score) for r in page_rows],
             "conv_id string, turn_idx int, score double",
         )
@@ -2233,7 +2238,8 @@ def _select_impl(
         # combined slot order. numFound = organic hit count + elevated
         # rows (Solr counts force-elevated non-matching docs too).
         elev_ids, excl_ids = o["elevate"]
-        elev = searcher.spark.createDataFrame(
+        elev = local_frame(
+            searcher.spark,
             [(c, t, i + 1) for i, (c, t) in enumerate(elev_ids)],
             "conv_id string, turn_idx int, slot int",
         )
@@ -2241,7 +2247,8 @@ def _select_impl(
             "score", F.round("score", 4)
         )
         if excl_ids:
-            excl = searcher.spark.createDataFrame(
+            excl = local_frame(
+                searcher.spark,
                 list(excl_ids), "conv_id string, turn_idx int")
             e_hits = e_hits.join(
                 F.broadcast(excl), ["conv_id", "turn_idx"], "left_anti")
@@ -2364,7 +2371,8 @@ def _select_impl(
             # clauses exist, so there is no head to rank — the
             # component legs (numFound, facets, stats) run over the
             # spec's DocSet domain below
-            head = searcher.spark.createDataFrame(
+            head = local_frame(
+                searcher.spark,
                 [], "conv_id string, turn_idx int, score double")
         else:
             head = searcher.search(spec, round_to=4)
@@ -2414,7 +2422,8 @@ def _select_impl(
             for sid, name, nd in segs:
                 bases.append((sid, name, acc))
                 acc += nd
-            seg_meta = F.broadcast(searcher.spark.createDataFrame(
+            seg_meta = F.broadcast(local_frame(
+                searcher.spark,
                 bases, "seg_id int, shard string, doc_base long"
             ))
             locs = (
@@ -2794,7 +2803,8 @@ def _select_impl(
         # ever touches the hit set.
         head_rows = heads.select(g_field).collect()
         key_type = heads.schema[g_field].dataType
-        heads = searcher.spark.createDataFrame(
+        heads = local_frame(
+            searcher.spark,
             [(r[0], i + 1) for i, r in enumerate(head_rows)
              if i + 1 > g_start],
             T.StructType([
@@ -3003,7 +3013,8 @@ def _select_impl(
             # SpellCheckComponent.java (toNamedList extendedResults)
             sugg_schema += ", origFreq long"
         if misspelled:
-            qdf = searcher.spark.createDataFrame(
+            qdf = local_frame(
+                searcher.spark,
                 [(t, int(dfs[t]),
                   int(sc_count if dfs[t] <= sc_maxqf else sc_alt))
                  for t in misspelled],
@@ -3052,7 +3063,7 @@ def _select_impl(
                 .orderBy("q", "dist", F.desc("df"), "suggestion")
             )
         else:
-            sugg = searcher.spark.createDataFrame([], sugg_schema)
+            sugg = local_frame(searcher.spark, [], sugg_schema)
         out["spellcheck"] = sugg
         if collate:
             top: dict = {}
@@ -3762,7 +3773,8 @@ def get(searcher_spark, params: dict, committed: DataFrame,
     fl = params.get("fl")
     if isinstance(fl, str):
         fl = [c.strip() for c in fl.split(",")]
-    ids = searcher_spark.createDataFrame(
+    ids = local_frame(
+        searcher_spark,
         keys, "conv_id string, turn_idx int"
     )
     return realtime_get(ids, committed, tlog, fields=fl).orderBy(
@@ -3823,7 +3835,8 @@ def suggest(searcher, params: dict) -> DataFrame:
     if dictionary != "document" and doc_params:
         raise ValueError(
             f"{sorted(doc_params)} require suggest.dictionary=document")
-    q = searcher.spark.createDataFrame(
+    q = local_frame(
+        searcher.spark,
         [(f,) for f in frags], "fragment string"
     )
     if dictionary == "document":
@@ -3996,7 +4009,8 @@ def mlt(searcher, params: dict, stored: DataFrame) -> dict:
     }
     if it == "list":
         ranked = searcher.interesting_terms(src.text, maxqt)
-        out["interestingTerms"] = searcher.spark.createDataFrame(
+        out["interestingTerms"] = local_frame(
+            searcher.spark,
             [(t, float(s)) for t, s in ranked], "term string, score double"
         )
     return out
@@ -4081,7 +4095,8 @@ def analysis(spark, params: dict) -> DataFrame:
                     part, si, stage, pos, tok,
                     part == "index" and si == last and tok in q_final,
                 ))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "part string, stage_idx long, stage string, pos long, "
         "token string, match boolean",
@@ -4200,7 +4215,8 @@ def update_json(spark, index_root: str, body: dict,
             dead |= {
                 (r.conv_id, int(r.turn_idx))
                 for r in s_probe.docset(dspec)
-                .join(F.broadcast(spark.createDataFrame(
+                .join(F.broadcast(local_frame(
+                    spark,
                     sorted(add_key_set),
                     "conv_id string, turn_idx int")),
                     ["conv_id", "turn_idx"], "left_semi")
@@ -4214,7 +4230,8 @@ def update_json(spark, index_root: str, body: dict,
                 "(the appended doc would be invisible) — replace "
                 "routes through the atomic-update/tlog path, or "
                 "rebuild + clear-tombstones")
-        add_keys = spark.createDataFrame(
+        add_keys = local_frame(
+            spark,
             sorted(add_key_set), "conv_id string, turn_idx int")
         clash = (
             s_probe.docmap().select("conv_id", "turn_idx")
@@ -4237,7 +4254,7 @@ def update_json(spark, index_root: str, body: dict,
         # batch_tag keeps the segment namespace disjoint per request
         build_index(
             spark,
-            spark.createDataFrame(docs, _UPDATE_DOC_SCHEMA),
+            local_frame(spark, docs, _UPDATE_DOC_SCHEMA),
             index_root, num_parts=1, resume=False,
             lineage_source=f"update-json-{batch_tag}",
             part_offset=batch_tag * 100_000,

@@ -39,6 +39,7 @@ from pyspark.sql import SparkSession
 
 from lucene_solr_spark.index.manifest import Manifest
 from lucene_solr_spark.query.model import BooleanSpec
+from lucene_solr_spark.session import local_frame
 
 
 #: Hard ceiling on cumulative tombstones (VERDICT r2 item 8). The mask
@@ -65,7 +66,8 @@ def delete_by_query(
     s = IndexSearcher(spark, index_root)
     keys = s.docset(spec).select("conv_id", "turn_idx")
     if s.deleted_keys:
-        prev = spark.createDataFrame(
+        prev = local_frame(
+            spark,
             sorted(s.deleted_keys), "conv_id string, turn_idx int"
         )
         keys = keys.unionByName(prev)
@@ -110,7 +112,8 @@ def delete_by_ids(
         raise ValueError(
             f"deleteById would leave {n} tombstones "
             f"(cap {max_tombstones}): rebuild instead")
-    keys = spark.createDataFrame(
+    keys = local_frame(
+        spark,
         sorted(merged), "conv_id string, turn_idx int")
 
     m = Manifest.load(index_root)

@@ -49,6 +49,7 @@ from lucene_solr_spark.index.build import (
     _ordinals,
 )
 from lucene_solr_spark.index.manifest import Manifest
+from lucene_solr_spark.session import local_frame
 
 STAGE_SCHEMA = (
     "dst int, term string, salt int, bucket int, df long, cf long, "
@@ -152,7 +153,8 @@ def merge_segments(
         (int(src), int(dst), int(base), int(pos))
         for src, (dst, base, pos) in plan.items()
     ]
-    plan_df = spark.createDataFrame(
+    plan_df = local_frame(
+        spark,
         plan_rows, "seg_id int, dst int, doc_base long, src_pos int"
     )
 

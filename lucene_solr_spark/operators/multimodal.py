@@ -560,18 +560,20 @@ def _unfilter_row(f: int, enc: np.ndarray, prev: np.ndarray) -> np.ndarray:
     if f == 2:
         return (enc.astype(np.int16) + prev).astype(np.uint8)
     out = np.zeros(n, np.uint8)
+    # byte arithmetic mod 256 on Python ints (uint8 scalar sums would
+    # wrap too, but with an overflow warning)
     for i in range(n):
-        left = out[i - 3] if i >= 3 else np.uint8(0)
-        up = prev[i]
-        ul = prev[i - 3] if i >= 3 else np.uint8(0)
+        left = int(out[i - 3]) if i >= 3 else 0
+        up = int(prev[i])
+        ul = int(prev[i - 3]) if i >= 3 else 0
         if f == 1:
-            v = enc[i] + left
+            pred = left
         elif f == 3:
-            v = enc[i] + (int(left) + int(up)) // 2
+            pred = (left + up) // 2
         else:
-            v = enc[i] + _paeth(
-                np.array([left]), np.array([up]), np.array([ul]))[0]
-        out[i] = np.uint8(v)
+            pred = int(_paeth(
+                np.array([left]), np.array([up]), np.array([ul]))[0])
+        out[i] = (int(enc[i]) + pred) % 256
     return out
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from lucene_solr_spark.analyzer import tokens_col
 from lucene_solr_spark.query.model import B, K1, BooleanSpec
+from lucene_solr_spark.session import local_frame
 
 DOC_KEY = ["conv_id", "turn_idx"]
 
@@ -343,7 +344,8 @@ def score_all(transcripts: DataFrame, spec: BooleanSpec) -> DataFrame:
     if spec.min_should_match > len(spec.should):
         # unsatisfiable mm (e.g. a wildcard that matched nothing —
         # Lucene's empty rewrite): zero hits, not an error
-        return transcripts.sparkSession.createDataFrame(
+        return local_frame(
+            transcripts.sparkSession,
             [], "conv_id string, turn_idx int, score double"
         )
     docs = transcripts_docs = doc_tokens(transcripts)
@@ -484,7 +486,8 @@ def score_all(transcripts: DataFrame, spec: BooleanSpec) -> DataFrame:
         # corpus dfs; per-doc phrase tf is a Column expression over
         # toks — everything broadcast except the matched-doc pass.
         spark = transcripts.sparkSession
-        pairs = spark.createDataFrame(
+        pairs = local_frame(
+            spark,
             [(i, t) for i, ph in enumerate(spec.pf_phrases) for t in ph],
             "ph_id int, term string",
         )

@@ -30,12 +30,14 @@ from __future__ import annotations
 import math
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.manifest import Manifest
 from lucene_solr_spark.query.model import BooleanSpec
 from lucene_solr_spark.query.scorer import score_segment
+from lucene_solr_spark.session import local_frame
 
 RESULT_SCHEMA = "conv_id string, turn_idx int, score double"
 
@@ -344,7 +346,13 @@ class IndexSearcher:
         """Serving mode: pin the postings table in executor memory
         (the OS-page-cache warm-index analog). ~15-20%
         off warm query latency in local mode; on a cluster it removes
-        object-store reads from the query path entirely."""
+        object-store reads from the query path entirely.
+
+        A second searcher over the same segment files finds the scan
+        already cached (Spark's CacheManager matches the plan) and
+        shares that entry instead of asking to cache it again."""
+        if self._postings_df.storageLevel != StorageLevel.NONE:
+            return self
         self._postings_df = self._postings_df.persist()
         self._postings_df.count()  # materialize
         return self
@@ -579,7 +587,8 @@ class IndexSearcher:
         tombstones exist (zero plan change otherwise)."""
         if not self.deleted_keys:
             return self._docmap_df
-        dead = self.spark.createDataFrame(
+        dead = local_frame(
+            self.spark,
             sorted(self.deleted_keys), "conv_id string, turn_idx int"
         )
         return self._docmap_df.join(
@@ -647,7 +656,7 @@ class IndexSearcher:
             # unsatisfiable mm — e.g. a multiterm pattern that matched
             # NOTHING in the dictionary (Lucene's empty rewrite with
             # mm=1): zero hits, not an error
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, [], RESULT_SCHEMA)
         if not spec.scoring_terms:
             # Lucene rejects pure-negative scored queries (QueryUtils
             # .makeQueryable wraps them for filters, not scoring) — and
@@ -995,7 +1004,8 @@ class IndexSearcher:
         }
         union = sorted({t for tf in src_tf.values() for t in tf})
         if not union or not sources:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 "conv_id string, turn_idx int, sim_conv_id string, "
                 "sim_turn_idx int, score double, sim_rank long",
@@ -1026,7 +1036,8 @@ class IndexSearcher:
                 b = (sc / best) if (boost and best > 0) else 1.0
                 src_rows.append((cid, tid, t, float(b)))
                 int_union.add(t)
-        src_map = self.spark.createDataFrame(
+        src_map = local_frame(
+            self.spark,
             src_rows,
             "src_conv_id string, src_turn_idx int, term string, "
             "boost double",
@@ -1152,7 +1163,7 @@ class IndexSearcher:
             .collect()
         )
         if not loc or not terms:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         seg_id, doc_ord, doc_len = (
             int(loc[0].seg_id), int(loc[0].doc_ord), float(loc[0].doc_len)
         )
@@ -1232,7 +1243,8 @@ class IndexSearcher:
             meta_rows.append(
                 ('"' + " ".join(ph) + '"', 0, float(pf_boost), isum)
             )
-        meta = self.spark.createDataFrame(
+        meta = local_frame(
+            self.spark,
             meta_rows, "term string, df long, boost double, idf double"
         )
         norm = K1 * (1 - B + B * doc_len / avgdl)
@@ -1291,8 +1303,9 @@ class IndexSearcher:
             "df long, idf double, contrib double"
         )
         if not keys or not terms:
-            return self.spark.createDataFrame([], schema)
-        keys_df = self.spark.createDataFrame(
+            return local_frame(self.spark, [], schema)
+        keys_df = local_frame(
+            self.spark,
             list(keys), "conv_id string, turn_idx int"
         )
         loc = (
@@ -1302,7 +1315,7 @@ class IndexSearcher:
             .collect()  # bounded: ≤ |page| rows
         )
         if not loc:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         by_seg: dict[int, list] = {}
         for r in loc:
             by_seg.setdefault(int(r.seg_id), []).append(
@@ -1349,11 +1362,13 @@ class IndexSearcher:
         def _idf(t: str) -> float:
             return math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5))
 
-        meta = self.spark.createDataFrame(
+        meta = local_frame(
+            self.spark,
             [(t, dfs[t], float(bm.get(t, 1.0)), _idf(t)) for t in terms],
             "term string, df long, boost double, idf double",
         )
-        lens = self.spark.createDataFrame(
+        lens = local_frame(
+            self.spark,
             [(r.conv_id, int(r.turn_idx), float(r.doc_len)) for r in loc],
             "conv_id string, turn_idx int, doc_len double",
         )
@@ -1606,7 +1621,8 @@ class IndexSearcher:
             len(seg_ids),
             max(self.spark.sparkContext.defaultParallelism, 1),
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(s,) for s in seg_ids], "seg_id int"
         ).repartition(n_parts, "seg_id")
 
@@ -1627,7 +1643,8 @@ class IndexSearcher:
         if spec.min_should_match > len(spec.should):
             # unsatisfiable mm (e.g. empty multiterm rewrite): zero
             # docs — NOT MatchAll, and NOT the filter-only fallback
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [], "conv_id string, turn_idx int"
             )
         ds_bc = self._docset_cached_bc(spec)

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from lucene_solr_spark.query.executor import postings_task_columns
 from lucene_solr_spark.query.model import BooleanSpec
 from lucene_solr_spark.query.scorer import match_segment
+from lucene_solr_spark.session import local_frame
 
 PARTIAL_SCHEMA = "seg_id int, term_ord int, cnt long"
 
@@ -1191,7 +1192,7 @@ def facet_field(
         rows = out.collect()
         for df in cached:
             df.unpersist()
-        out = searcher.spark.createDataFrame(rows, out.schema)
+        out = local_frame(searcher.spark, rows, out.schema)
     return out
 
 
@@ -1339,7 +1340,7 @@ def facet_relatedness(
     # partials free immediately (same discipline as facet_field)
     rows = out.collect()
     partials.unpersist()
-    return searcher.spark.createDataFrame(rows, out.schema)
+    return local_frame(searcher.spark, rows, out.schema)
 
 
 def facet_block_domain(

@@ -11,8 +11,46 @@ tables broadcast.
 from __future__ import annotations
 
 import os
+from datetime import datetime, timezone
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: StructType | str
+) -> DataFrame:
+    """A frame of driver-side rows, planned as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(<python list>, schema)`` plans a ``Scan
+    ExistingRDD`` over a PythonRDD, so every job reading the frame runs
+    Python worker tasks just to unpickle a handful of rows (collecting
+    10 rows: 356–519 ms on a 4-core host). The same rows as an Arrow
+    table are a ``LocalTableScan`` the JVM serves itself (25–47 ms).
+
+    ``rows`` are tuples (or Rows) in ``schema`` order; ``schema`` is a
+    StructType or a DDL string. Naive datetimes are local time, as in
+    ``createDataFrame``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for values, field, af in zip(cols, schema.fields, arrow):
+        if isinstance(field.dataType, TimestampType):
+            values = [
+                v.astimezone(timezone.utc) if isinstance(v, datetime) else v
+                for v in values
+            ]
+        arrays.append(pa.array(values, type=af.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def cpu_scaled(df: DataFrame, *cols: str) -> DataFrame:

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from lucene_solr_spark.analyzer import tokenize_one
 from lucene_solr_spark.query.model import BooleanSpec
+from lucene_solr_spark.session import local_frame
 
 #: selectable / sortable docvalues columns (everything else is 400)
 _DV_COLS = ("conv_id", "turn_idx", "role", "tool", "ftok", "ts", "doc_len")
@@ -445,7 +446,8 @@ def sql_query(searcher, stmt: str) -> DataFrame:
             alias = q["aggs"][0][3]
             n = (searcher.docset_count(spec) if _nonempty(spec)
                  else searcher.docmap().count())
-            return searcher.spark.createDataFrame(
+            return local_frame(
+                searcher.spark,
                 [(n,)], f"{alias} long")
         need = sorted({c for _, k, c, _ in q["aggs"] if k != "count"})
         dm = searcher.docmap().select("conv_id", "turn_idx", *need)

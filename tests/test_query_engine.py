@@ -5,6 +5,10 @@ shape; WAND-pruned disjunctions must equal unpruned scoring."""
 
 from __future__ import annotations
 
+import subprocess
+import sys
+from pathlib import Path
+
 import numpy as np
 import pytest
 
@@ -238,3 +242,34 @@ def test_early_topk_cursor_pages_equal_head(searcher):
         last = page[-1]
         cursor = (last.conv_id, last.turn_idx)
     assert pages == head
+
+
+_TWO_SEARCHERS = """
+import sys
+sys.path.insert(0, {repo!r})
+from lucene_solr_spark.query.executor import IndexSearcher
+from lucene_solr_spark.session import get_spark
+spark = get_spark("persist-twice", master="local[2]", shuffle_partitions=2)
+a = IndexSearcher(spark, {root!r}).persist()
+b = IndexSearcher(spark, {root!r}).persist()
+print("ENTRIES", spark.sparkContext._jsc.getPersistentRDDs().size())
+spark.stop()
+"""
+
+
+def test_second_searcher_shares_the_postings_cache(searcher):
+    """Two searchers over one index root: the second persist() must not
+    ask Spark to cache the already-cached scan again (a CacheManager
+    warning), and Spark holds one cache entry. Runs in its own process
+    so the JVM's log output can be read."""
+    script = _TWO_SEARCHERS.format(
+        repo=str(Path(__file__).resolve().parents[1]),
+        root=searcher[0].index_root,
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "Asked to cache already cached data" not in proc.stderr
+    assert "ENTRIES 1" in proc.stdout

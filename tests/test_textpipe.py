@@ -428,6 +428,27 @@ def test_semantic_dedup_contract(spark, sf_dir):
             assert (keeper.csim, keeper.vec_id) <= (loser.csim, loser.vec_id)
 
 
+def test_png_unfilter_is_warning_free():
+    """Sub, Average and Paeth unfiltering wrap mod 256 without numpy
+    scalar-overflow warnings, and decode to the same bytes as the
+    uint8-scalar arithmetic they replaced (digest pinned from it)."""
+    import hashlib
+    import warnings
+
+    import numpy as np
+
+    rng = np.random.RandomState(11)
+    h = hashlib.md5()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for f in (1, 3, 4):
+            for _ in range(4):
+                prev = rng.randint(0, 256, 48).astype(np.uint8)
+                enc = rng.randint(0, 256, 48).astype(np.uint8)
+                h.update(multimodal._unfilter_row(f, enc, prev).tobytes())
+    assert h.hexdigest() == "68b3a69dba08fd4ceec836fcb4731199"
+
+
 def test_png_filters_roundtrip_and_crc():
     """PNG codec pins, no Spark: (a) every filter type 0-4 round-trips
     filter→unfilter on random rows; (b) the synthesized file decodes
