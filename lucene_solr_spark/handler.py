@@ -220,8 +220,13 @@ def _pure_filter(spec: BooleanSpec, raw: str) -> BooleanSpec:
     return spec
 
 
-def _merge_filters(spec: BooleanSpec, f_spec: BooleanSpec) -> BooleanSpec:
-    """Fold a pure filter's constraints into ``spec`` (fq semantics)."""
+def _merge_filters(
+    spec: BooleanSpec | None, f_spec: BooleanSpec
+) -> BooleanSpec:
+    """Fold a pure filter's constraints into ``spec`` (fq semantics);
+    ``spec=None`` is MatchAllDocs."""
+    if spec is None:
+        spec = BooleanSpec()
     return replace(
         spec,
         filters=spec.filters + f_spec.filters,
@@ -2667,9 +2672,6 @@ def _select_impl(
         # domain only (the multi-select rule, same engine API the
         # facet.field leg rides)
         p_spec = _exclude_filter_fields(spec, pv_ex) if pv_ex else spec
-        # facet_pivot does not rewrite multiterm specs itself
-        p_spec = searcher.rewrite(p_spec) if p_spec.needs_rewrite \
-            else p_spec
         lim = o["facet_limit"]
         if len(pv_fields) == 2:
             f1, f2 = pv_fields
@@ -3198,10 +3200,6 @@ def _select_impl(
                 n_spec = _exclude_filter_fields(spec, ex) if ex else spec
                 if dom_f is not None:
                     n_spec = _merge_filters(n_spec, dom_f)
-                n_spec = (
-                    searcher.rewrite(n_spec) if n_spec.needs_rewrite
-                    else n_spec
-                )
                 out["facets"][name] = facet_nested(
                     searcher, f1, f2, spec=n_spec, limit1=l1, limit2=l2
                 )

@@ -36,13 +36,18 @@ from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.manifest import Manifest
 from lucene_solr_spark.query.model import BooleanSpec
-from lucene_solr_spark.query.scorer import score_segment
+from lucene_solr_spark.query.scorer import match_segment, score_segment
 from lucene_solr_spark.session import local_frame
 
 RESULT_SCHEMA = "conv_id string, turn_idx int, score double"
 
 #: docmap columns every scorer needs (norms + result ids)
 _BASE_COLS = ["doc_ord", "doc_len", "conv_id", "turn_idx"]
+#: docmap columns a match reads beyond the caller's (match_segment
+#: bounds on the segment's max doc_len)
+_MATCH_COLS = ["doc_ord", "doc_len"]
+#: the business key the liveDocs mask is looked up by
+_KEY_COLS = ["conv_id", "turn_idx"]
 
 
 def _exclude_filter_fields(
@@ -173,6 +178,112 @@ def postings_task_columns(spec) -> list[str] | None:
         return None
     return ["seg_id", "term", "df", "cf", "first_docs", "doc_offs",
             "tf_offs", "max_tfs", "min_dls", "doc_bytes", "tf_bytes"]
+
+
+def segment_domain(
+    searcher,
+    spec: BooleanSpec | None,
+    cols: list[str],
+    kernel,
+    schema: str,
+    every_segment: bool = False,
+) -> DataFrame:
+    """The per-segment match domain (``SolrIndexSearcher#getDocSet``
+    feeding a collector): every match/facet task of the engine runs
+    through here. One task per segment reads that segment's docmap,
+    applies liveDocs and the fq mask, matches ``spec`` and returns
+    ``kernel(seg_id, dm, hits, live)`` — a pandas frame of ``schema``.
+    Returns the ``groupBy("seg_id").applyInPandas`` frame.
+
+    - ``dm`` holds ``cols`` plus whatever the match read: the fq
+      columns, doc_ord/doc_len and, with tombstones, the key columns.
+    - ``hits`` are the live matching doc indices. ``spec=None`` is
+      MatchAllDocs: ``hits`` is None (every doc) when the index has no
+      tombstones.
+    - ``live()`` returns the liveDocs mask (None without tombstones).
+    - Multiterm specs are rewritten here. On a queryResultCache hit
+      (``cache_docset``) the cached bits are the hits and only ``cols``
+      are read; ``live()`` then reads the key columns when called.
+    - MatchAll, cache hits, pure-negative specs and ``every_segment``
+      (kernels that emit rows for segments without hits) run on the
+      seg-id driver, each task reading its own term-pruned postings;
+      otherwise the term-pruned postings scan drives the tasks.
+    """
+    if spec is not None and spec.needs_rewrite:
+        spec = searcher.rewrite(spec)
+    seg_dirs = searcher.seg_dir_by_id
+    deleted_bc = searcher._deleted_bc
+    keys = _KEY_COLS if searcher.deleted_keys else []
+    ds_bc = None if spec is None else searcher._docset_cached_bc(spec)
+    if ds_bc is not None:
+        dm_cols = list(cols)
+    elif spec is None:
+        dm_cols = [*cols, *keys]
+    else:
+        dm_cols = filter_cols(spec, [*_MATCH_COLS, *cols]) + keys
+    dm_cols = list(dict.fromkeys(dm_cols))
+    lookup = [] if spec is None else list(spec.lookup_terms)
+    seg_driven = (
+        spec is None or ds_bc is not None or every_segment
+        or not spec.scoring_terms
+    )
+
+    def run(pdf):
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        seg_id = int(pdf["seg_id"].iloc[0])
+        seg_dir = seg_dirs[seg_id]
+        dm = pq.read_table(
+            f"{seg_dir}/docmap.parquet", columns=dm_cols
+        ).to_pandas()  # written sorted by doc_ord
+        deleted = deleted_bc.value if deleted_bc else None
+        if ds_bc is not None:
+            # liveDocs are baked into the cached bits
+            bits, n = ds_bc.get(seg_id)
+            hits = np.flatnonzero(np.unpackbits(
+                np.frombuffer(bits, np.uint8), count=n
+            ))
+
+            def live():
+                if not keys:
+                    return None
+                kd = dm if set(keys) <= set(dm.columns) else pq.read_table(
+                    f"{seg_dir}/docmap.parquet", columns=keys
+                ).to_pandas()
+                return apply_deletes(None, kd, deleted)
+
+            return kernel(seg_id, dm, hits, live)
+        live_mask = apply_deletes(None, dm, deleted)
+        if spec is None:
+            hits = None if live_mask is None else np.flatnonzero(live_mask)
+        else:
+            allowed = filter_mask(dm, spec)
+            if live_mask is not None:
+                allowed = live_mask if allowed is None else (
+                    allowed & live_mask)
+            term_rows = {}
+            if not seg_driven:
+                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
+            elif lookup:  # filter-only specs never touch postings
+                post = pq.read_table(
+                    f"{seg_dir}/postings.parquet",
+                    filters=[("term", "in", lookup)],
+                    columns=postings_task_columns(spec),
+                ).to_pandas()
+                term_rows = {r["term"]: r for _, r in post.iterrows()}
+            hits = match_segment(
+                spec, term_rows, len(dm), allowed,
+                int(dm["doc_len"].max()) if len(dm) else 0,
+            )
+        return kernel(seg_id, dm, hits, lambda: live_mask)
+
+    run.__name__ = kernel.__name__  # names the UDF in the plan
+    driver = (
+        searcher.seg_driver() if seg_driven
+        else searcher.postings().filter(F.col("term").isin(lookup))
+    )
+    return driver.groupBy("seg_id").applyInPandas(run, schema)
 
 
 def _write_bits(cache_dir: str, seg_id: int, payload: bytes) -> None:
@@ -489,10 +600,10 @@ class IndexSearcher:
         per-segment counts). On a hit: ``docset_count`` answers from
         the warm-time popcounts (ZERO jobs — the /select numFound),
         ``docset`` serves keys without postings or fq evaluation, and
-        the facet sparse pass skips match_segment AND the fq docvalues
-        columns entirely (see facets.segment_partials). Bounded like
-        the filterCache: MAX_DOCSET_CACHE entries, oldest evicted and
-        its sidecar dir removed.
+        every segment_domain task skips match_segment AND the fq
+        docvalues columns entirely. Bounded like the filterCache:
+        MAX_DOCSET_CACHE entries, oldest evicted and its sidecar dir
+        removed.
 
         ref: solr/core/src/java/org/apache/solr/search/
         SolrIndexSearcher.java (getDocSet / queryResultCache)"""
@@ -503,45 +614,11 @@ class IndexSearcher:
         key = self._docset_key(spec)
         if key in self._docset_cache:
             return
-        lspec = key
-        seg_dirs = self.seg_dir_by_id
-        # the warm task needs the doc keys ONLY to bake the liveDocs
-        # mask in; with no tombstones the scan drops the key columns
-        # (10M string reads per warm at 10M turns, otherwise)
-        base_cols = _BASE_COLS if self.deleted_keys else [
-            "doc_ord", "doc_len",
-        ]
-        dm_cols = filter_cols(lspec, base_cols)
-        deleted_bc = self._deleted_bc
-        lookup = list(lspec.lookup_terms)
         cdir = self._cache_entry_dir("ds", key)
 
-        def one(pdf):
+        def one(seg_id, dm, hits, live):
             import pandas as pd
-            import pyarrow.parquet as pq
 
-            from lucene_solr_spark.query.scorer import match_segment
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(
-                filter_mask(dm, lspec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            term_rows = {}
-            if lookup:
-                post_tbl = pq.read_table(
-                    f"{seg_dirs[seg_id]}/postings.parquet",
-                    filters=[("term", "in", lookup)],
-                    columns=postings_task_columns(lspec),
-                ).to_pandas()
-                term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            hits = match_segment(
-                lspec, term_rows, len(dm), allowed,
-                int(dm["doc_len"].max()) if len(dm) else 0,
-            )
             mask = np.zeros(len(dm), dtype=np.uint8)
             mask[hits] = 1
             _write_bits(cdir, seg_id, np.packbits(mask).tobytes())
@@ -550,12 +627,11 @@ class IndexSearcher:
                  "pop": [int(mask.sum())]}
             )
 
-        rows = (
-            self.seg_driver()
-            .groupBy("seg_id")
-            .applyInPandas(one, "seg_id int, n long, pop long")
-            .collect()  # O(#segments) count rows — never the bits
-        )
+        # every segment writes its bits file, hits or not
+        rows = segment_domain(
+            self, key, [], one, "seg_id int, n long, pop long",
+            every_segment=True,
+        ).collect()  # O(#segments) count rows — never the bits
         meta = {int(r.seg_id): (int(r.n), int(r.pop)) for r in rows}
         if len(self._docset_cache) >= self.MAX_DOCSET_CACHE:
             self._docset_cache.pop(
@@ -1417,7 +1493,7 @@ class IndexSearcher:
              SignificantTermsQParserPlugin.java"""
         import numpy as np
 
-        from lucene_solr_spark.query.scorer import TermPostings, match_segment
+        from lucene_solr_spark.query.scorer import TermPostings
 
         if spec.needs_rewrite:
             spec = self.rewrite(spec)
@@ -1627,9 +1703,10 @@ class IndexSearcher:
         ).repartition(n_parts, "seg_id")
 
     # -- DocSet (all matches, no scoring) ------------------------------
-    def docset(self, spec: BooleanSpec) -> DataFrame:
+    def docset(self, spec: BooleanSpec | None) -> DataFrame:
         """ALL matching (conv_id, turn_idx) — ``getDocSet`` analog,
         used by filter queries, exports, and MultiTermQuery rewrites.
+        ``spec=None`` is MatchAllDocs: every live doc.
 
         Specs WITHOUT positive terms (pure-negative ``-stream`` /
         filter-only ``role:assistant``) run over the segment-id driver
@@ -1637,92 +1714,29 @@ class IndexSearcher:
         MatchAllDocs minus exclusions, ``QueryUtils#makeQueryable``);
         each task then reads its own segment's postings for the
         excluded terms straight from Parquet (term-pruned by row-group
-        stats) — no corpus shuffle either way."""
-        if spec.needs_rewrite:
-            spec = self.rewrite(spec)
-        if spec.min_should_match > len(spec.should):
-            # unsatisfiable mm (e.g. empty multiterm rewrite): zero
-            # docs — NOT MatchAll, and NOT the filter-only fallback
-            return local_frame(
-                self.spark,
-                [], "conv_id string, turn_idx int"
-            )
-        ds_bc = self._docset_cached_bc(spec)
-        if ds_bc is not None:
-            # queryResultCache hit: serve keys straight off the
-            # broadcast hit bitsets — no postings read, no fq
-            # evaluation, docmap scan pruned to the two key columns
-            # (liveDocs already baked into the cached bits)
-            seg_dirs = self.seg_dir_by_id
-
-            def from_bits(pdf):
-                import numpy as np
-                import pandas as pd
-                import pyarrow.parquet as pq
-
-                seg_id = int(pdf["seg_id"].iloc[0])
-                bits, n = ds_bc.get(seg_id)
-                hits = np.flatnonzero(np.unpackbits(
-                    np.frombuffer(bits, np.uint8), count=n
-                ))
-                dm = pq.read_table(
-                    f"{seg_dirs[seg_id]}/docmap.parquet",
-                    columns=["conv_id", "turn_idx"],
-                ).to_pandas()
-                sel = dm.iloc[hits]
-                return pd.DataFrame(
-                    {"conv_id": sel["conv_id"], "turn_idx": sel["turn_idx"]}
+        stats) — no corpus shuffle either way. A queryResultCache hit
+        serves the keys off the cached bits (see segment_domain)."""
+        if spec is not None:
+            if spec.needs_rewrite:
+                spec = self.rewrite(spec)
+            if spec.min_should_match > len(spec.should):
+                # unsatisfiable mm (e.g. empty multiterm rewrite): zero
+                # docs — NOT MatchAll, and NOT the filter-only fallback
+                return local_frame(
+                    self.spark,
+                    [], "conv_id string, turn_idx int"
                 )
 
-            return self.seg_driver().groupBy("seg_id").applyInPandas(
-                from_bits, schema="conv_id string, turn_idx int"
-            )
-        seg_dirs = self.seg_dir_by_id
-        dm_cols = filter_cols(spec, _BASE_COLS)
-        pure_negative = not spec.scoring_terms
-        lookup = list(spec.lookup_terms)
-        deleted_bc = self._deleted_bc
-
-        def run_seg(pdf):
+        def keys(seg_id, dm, hits, live):
             import pandas as pd
-            import pyarrow.parquet as pq
 
-            seg_id = int(pdf["seg_id"].iloc[0])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(
-                filter_mask(dm, spec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:  # filter-only specs never touch postings
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(spec),
-                    ).to_pandas()
-                    term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            from lucene_solr_spark.query.scorer import match_segment
-
-            hits = match_segment(
-                spec, term_rows, len(dm), allowed,
-                int(dm["doc_len"].max()) if len(dm) else 0,
-            )
-            sel = dm.iloc[hits]
+            sel = dm if hits is None else dm.iloc[hits]
             return pd.DataFrame(
                 {"conv_id": sel["conv_id"], "turn_idx": sel["turn_idx"]}
             )
 
-        if pure_negative:
-            driver = self.seg_driver()
-        else:
-            driver = self.postings().filter(F.col("term").isin(lookup))
-        return driver.groupBy("seg_id").applyInPandas(
-            run_seg, schema="conv_id string, turn_idx int"
+        return segment_domain(
+            self, spec, _KEY_COLS, keys, "conv_id string, turn_idx int"
         )
 
     def payload_score(

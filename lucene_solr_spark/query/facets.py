@@ -41,9 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.query.executor import postings_task_columns
+from lucene_solr_spark.query.executor import segment_domain
 from lucene_solr_spark.query.model import BooleanSpec
-from lucene_solr_spark.query.scorer import match_segment
 from lucene_solr_spark.session import local_frame
 
 PARTIAL_SCHEMA = "seg_id int, term_ord int, cnt long"
@@ -110,10 +109,7 @@ def segment_partials(searcher, req: FacetRequest, spec: BooleanSpec | None) -> D
     MatchAllDocs domain, only a seg_id list does.
     """
     ord_col = f"{req.field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
     want_missing = req.missing
-    has_deletes = bool(searcher.deleted_keys)  # drives column reads
-    deleted_bc = searcher._deleted_bc  # broadcast mask (None = no-op)
     if req.group_by not in (None, "conv_id"):
         # only the segment-local block key sums correctly (see
         # FacetRequest.group_by); anything else would need a global
@@ -122,12 +118,9 @@ def segment_partials(searcher, req: FacetRequest, spec: BooleanSpec | None) -> D
                          "segment-local")
     grouped = req.group_by is not None
 
-    def _count_ords(
-        seg_id: int,
-        hits: np.ndarray | None,
-        ords: np.ndarray,
-        groups: np.ndarray | None = None,
-    ) -> pd.DataFrame:
+    def count_ords(seg_id, dm, hits, live) -> pd.DataFrame:
+        ords = dm[ord_col].to_numpy(np.int64)
+        groups = dm["conv_id"].to_numpy() if grouped else None
         if hits is not None:
             ords = ords[hits]
             if groups is not None:
@@ -163,107 +156,8 @@ def segment_partials(searcher, req: FacetRequest, spec: BooleanSpec | None) -> D
             }
         )
 
-    if spec is None:
-        seg_df = searcher.seg_driver()
-
-        def count_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            from lucene_solr_spark.query.executor import apply_deletes
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            cols = [ord_col] + (["conv_id", "turn_idx"] if has_deletes else [])
-            if grouped and "conv_id" not in cols:
-                cols.append("conv_id")
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=cols
-            ).to_pandas()
-            ords = dm[ord_col].to_numpy().astype(np.int64)
-            live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
-            hits = None if live is None else np.flatnonzero(live)
-            groups = dm["conv_id"].to_numpy() if grouped else None
-            return _count_ords(seg_id, hits, ords, groups)
-
-        return seg_df.groupBy("seg_id").applyInPandas(count_all, PARTIAL_SCHEMA)
-
-    ds_bc = searcher._docset_cached_bc(spec)
-    if ds_bc is not None:
-        # queryResultCache hit (see IndexSearcher.cache_docset): the
-        # domain's per-segment hit bitsets are already broadcast, so
-        # the sparse pass skips match_segment, the postings read AND
-        # the fq docvalues columns — each task unpacks its bits and
-        # bincounts the ord column (liveDocs baked into the bits)
-        seg_df = searcher.seg_driver()
-
-        def count_cached(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            bits, n = ds_bc.get(seg_id)
-            hits = np.flatnonzero(np.unpackbits(
-                np.frombuffer(bits, np.uint8), count=n
-            ))
-            cols = [ord_col] + (["conv_id"] if grouped else [])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=cols
-            ).to_pandas()
-            groups = dm["conv_id"].to_numpy() if grouped else None
-            return _count_ords(
-                seg_id, hits, dm[ord_col].to_numpy().astype(np.int64),
-                groups,
-            )
-
-        return seg_df.groupBy("seg_id").applyInPandas(
-            count_cached, PARTIAL_SCHEMA
-        )
-
-    from lucene_solr_spark.query.executor import apply_deletes, filter_cols, filter_mask
-
-    lookup = list(spec.lookup_terms)
-    pure_negative = not spec.scoring_terms
-    dm_cols = filter_cols(spec, ["doc_ord", "doc_len", ord_col])
-    if has_deletes:
-        dm_cols += [c for c in ("conv_id", "turn_idx") if c not in dm_cols]
-    if grouped and "conv_id" not in dm_cols:
-        dm_cols.append("conv_id")
-
-    def count_hits(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()  # written sorted by doc_ord
-        n_docs = len(dm)
-        allowed = apply_deletes(
-            filter_mask(dm, spec), dm, deleted_bc.value if deleted_bc else None
-        )
-        if pure_negative:
-            term_rows = {}
-            if lookup:
-                post_tbl = pq.read_table(
-                    f"{seg_dirs[seg_id]}/postings.parquet",
-                    filters=[("term", "in", lookup)],
-                    columns=postings_task_columns(spec),
-                ).to_pandas()
-                term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-        else:
-            term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-        max_dl = int(dm["doc_len"].max()) if n_docs else 0
-        hits = match_segment(spec, term_rows, n_docs, allowed, max_dl)
-        groups = dm["conv_id"].to_numpy() if grouped else None
-        return _count_ords(
-            seg_id, hits, dm[ord_col].to_numpy(np.int64), groups
-        )
-
-    # pure-negative / filter-only domains must visit EVERY segment
-    # (term-pruned postings would silently drop term-free segments);
-    # the seg-id driver guarantees that, tasks read their own postings.
-    driver = (
-        searcher.seg_driver() if pure_negative
-        else searcher.postings().filter(F.col("term").isin(lookup))
-    )
-    return driver.groupBy("seg_id").applyInPandas(count_hits, PARTIAL_SCHEMA)
+    cols = [ord_col] + (["conv_id"] if grouped else [])
+    return segment_domain(searcher, spec, cols, count_ords, PARTIAL_SCHEMA)
 
 
 def _with_terms(searcher, partials: DataFrame, field: str) -> DataFrame:
@@ -367,87 +261,19 @@ def facet_metrics(
         f"{p} {t}" for p, t in partial_cols
     )
     ord_col = f"{field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    deleted_bc = searcher._deleted_bc
-    has_deletes = bool(searcher.deleted_keys)
 
-    from lucene_solr_spark.query.executor import (
-        apply_deletes,
-        filter_cols,
-        filter_mask,
-    )
-
-    if spec is not None and spec.needs_rewrite:
-        spec = searcher.rewrite(spec)
-    ds_bc = searcher._docset_cached_bc(spec) if spec is not None else None
-    lookup = list(spec.lookup_terms) if spec is not None else []
-    pure_negative = spec is not None and not spec.scoring_terms
-    base_cols = ["doc_ord", "doc_len", ord_col]
-    base_cols += [c for c in metric_cols if c not in base_cols]
-    if ds_bc is not None:
-        # queryResultCache hit: the hit bits replace match_segment —
-        # only the ord and metric columns are ever read
-        dm_cols = list(dict.fromkeys([ord_col, *metric_cols]))
-    else:
-        dm_cols = (
-            filter_cols(spec, base_cols) if spec is not None
-            else list(base_cols)
-        )
-        if has_deletes:
-            dm_cols += [
-                c for c in ("conv_id", "turn_idx") if c not in dm_cols
-            ]
-
-    def run_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()
-        n_docs = len(dm)
+    def bucket_metrics(seg_id, dm, hits, live) -> pd.DataFrame:
         ords = dm[ord_col].to_numpy(np.int64)
         # numeric kinds read float64 (nulls → NaN, masked out below);
         # missing/countvals/unique read the raw values + a null mask
         vals = {c: dm[c].to_numpy(np.float64) for c in num_cols}
         nulls = {c: dm[c].isna().to_numpy() for c in metric_cols}
         objs = {c: dm[c].to_numpy(object) for c in uq_cols}
-        if ds_bc is not None:
-            bits, n = ds_bc.get(seg_id)
-            hits = np.flatnonzero(np.unpackbits(
-                np.frombuffer(bits, np.uint8), count=n
-            ))
-        elif spec is None:
-            live = apply_deletes(
-                None, dm, deleted_bc.value if deleted_bc else None
-            )
-            hits = None if live is None else np.flatnonzero(live)
-        else:
-            allowed = apply_deletes(
-                filter_mask(dm, spec),
-                dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(spec),
-                    ).to_pandas()
-                    term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            max_dl = int(dm["doc_len"].max()) if n_docs else 0
-            hits = match_segment(spec, term_rows, n_docs, allowed, max_dl)
         if hits is not None:
             ords = ords[hits]
             vals = {c: v[hits] for c, v in vals.items()}
             nulls = {c: v[hits] for c, v in nulls.items()}
             objs = {c: v[hits] for c, v in objs.items()}
-        else:
-            nulls, objs = dict(nulls), dict(objs)
         keep = ords >= 0
         ords = ords[keep]
         vals = {c: v[keep] for c, v in vals.items()}
@@ -495,12 +321,8 @@ def facet_metrics(
             data[f"u_{c}"] = [_USEP.join(sorted(s)) for s in sets]
         return pd.DataFrame(data)
 
-    if spec is None or pure_negative or ds_bc is not None:
-        driver = searcher.seg_driver()
-    else:
-        driver = searcher.postings().filter(F.col("term").isin(lookup))
-    partials = driver.groupBy("seg_id").applyInPandas(
-        run_seg, partial_schema
+    partials = segment_domain(
+        searcher, spec, [ord_col, *metric_cols], bucket_metrics, partial_schema
     )
     parts = _with_terms(searcher, partials, field)
     merge_aggs = [F.sum("cnt").alias("cnt")]
@@ -587,13 +409,9 @@ def facet_pivot(
     pairs, not field-cardinality product. Rows with either value
     missing (ord -1) are excluded, Lucene missing semantics."""
     o1, o2 = f"{f1}_ord", f"{f2}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    has_deletes = bool(searcher.deleted_keys)
-    deleted_bc = searcher._deleted_bc
-    pair_schema = "seg_id int, ord1 int, ord2 int, cnt long"
 
-    def count_pairs(seg_id: int, hits: np.ndarray | None,
-                    a: np.ndarray, b: np.ndarray) -> pd.DataFrame:
+    def count_pairs(seg_id, dm, hits, live) -> pd.DataFrame:
+        a, b = dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64)
         if hits is not None:
             a, b = a[hits], b[hits]
         m = (a >= 0) & (b >= 0)
@@ -606,95 +424,10 @@ def facet_pivot(
             "cnt": cnt.astype(np.int64),
         })
 
-    if spec is None:
-        seg_df = searcher.seg_driver()
-
-        def run_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            from lucene_solr_spark.query.executor import apply_deletes
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            cols = [o1, o2] + (["conv_id", "turn_idx"] if has_deletes else [])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=cols
-            ).to_pandas()
-            live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
-            hits = None if live is None else np.flatnonzero(live)
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy().astype(np.int64),
-                dm[o2].to_numpy().astype(np.int64),
-            )
-
-        pairs = seg_df.groupBy("seg_id").applyInPandas(run_all, pair_schema)
-    elif (ds_bc := searcher._docset_cached_bc(spec)) is not None:
-        # queryResultCache hit: the broadcast hit bits replace
-        # match_segment — only the two ord columns are read
-        def run_cached(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            bits, n = ds_bc.get(seg_id)
-            hits = np.flatnonzero(np.unpackbits(
-                np.frombuffer(bits, np.uint8), count=n
-            ))
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=[o1, o2]
-            ).to_pandas()
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-            )
-
-        pairs = searcher.seg_driver().groupBy("seg_id").applyInPandas(
-            run_cached, pair_schema
-        )
-    else:
-        from lucene_solr_spark.query.executor import apply_deletes, filter_cols, filter_mask
-
-        lookup = list(spec.lookup_terms)
-        pure_negative = not spec.scoring_terms
-        dm_cols = filter_cols(spec, ["doc_ord", "doc_len", o1, o2])
-        if has_deletes:
-            dm_cols += [c for c in ("conv_id", "turn_idx") if c not in dm_cols]
-
-        def run_hits(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(  # fq domain
-                filter_mask(dm, spec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(spec),
-                    ).to_pandas()
-                    term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            hits = match_segment(
-                spec, term_rows, len(dm), allowed,
-                int(dm["doc_len"].max()) if len(dm) else 0,
-            )
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-            )
-
-        driver = (
-            searcher.seg_driver() if pure_negative
-            else searcher.postings().filter(F.col("term").isin(lookup))
-        )
-        pairs = driver.groupBy("seg_id").applyInPandas(run_hits, pair_schema)
+    pairs = segment_domain(
+        searcher, spec, [o1, o2], count_pairs,
+        "seg_id int, ord1 int, ord2 int, cnt long",
+    )
 
     d1 = searcher.dicts().filter(F.col("field") == f1).select(
         "seg_id", F.col("term_ord").alias("ord1"), F.col("term").alias("v1")
@@ -747,15 +480,10 @@ def facet_pivot3(
     ref: solr/core/src/java/org/apache/solr/handler/component/
     PivotFacetProcessor.java (doPivots recursion)."""
     o1, o2, o3 = f"{f1}_ord", f"{f2}_ord", f"{f3}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    has_deletes = bool(searcher.deleted_keys)
-    deleted_bc = searcher._deleted_bc
-    triple_schema = "seg_id int, ord1 int, ord2 int, ord3 int, cnt long"
     _B21 = (1 << 21) - 1
 
-    def count_triples(seg_id: int, hits: np.ndarray | None,
-                      a: np.ndarray, b: np.ndarray,
-                      c: np.ndarray) -> pd.DataFrame:
+    def count_triples(seg_id, dm, hits, live) -> pd.DataFrame:
+        a, b, c = (dm[o].to_numpy(np.int64) for o in (o1, o2, o3))
         if hits is not None:
             a, b, c = a[hits], b[hits], c[hits]
         m = (a >= 0) & (b >= 0) & (c >= 0)
@@ -770,80 +498,10 @@ def facet_pivot3(
             "cnt": cnt.astype(np.int64),
         })
 
-    if spec is None:
-        def run_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            from lucene_solr_spark.query.executor import apply_deletes
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            cols = [o1, o2, o3] + (
-                ["conv_id", "turn_idx"] if has_deletes else [])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=cols
-            ).to_pandas()
-            live = apply_deletes(
-                None, dm, deleted_bc.value if deleted_bc else None)
-            hits = None if live is None else np.flatnonzero(live)
-            return count_triples(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-                dm[o3].to_numpy(np.int64),
-            )
-
-        triples = searcher.seg_driver().groupBy("seg_id").applyInPandas(
-            run_all, triple_schema)
-    else:
-        from lucene_solr_spark.query.executor import (
-            apply_deletes, filter_cols, filter_mask,
-        )
-
-        lookup = list(spec.lookup_terms)
-        pure_negative = not spec.scoring_terms
-        dm_cols = filter_cols(spec, ["doc_ord", "doc_len", o1, o2, o3])
-        if has_deletes:
-            dm_cols += [c for c in ("conv_id", "turn_idx")
-                        if c not in dm_cols]
-
-        def run_hits(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(
-                filter_mask(dm, spec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(spec),
-                    ).to_pandas()
-                    term_rows = {
-                        r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            hits = match_segment(
-                spec, term_rows, len(dm), allowed,
-                int(dm["doc_len"].max()) if len(dm) else 0,
-            )
-            return count_triples(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-                dm[o3].to_numpy(np.int64),
-            )
-
-        driver = (
-            searcher.seg_driver() if pure_negative
-            else searcher.postings().filter(F.col("term").isin(lookup))
-        )
-        triples = driver.groupBy("seg_id").applyInPandas(
-            run_hits, triple_schema)
+    triples = segment_domain(
+        searcher, spec, [o1, o2, o3], count_triples,
+        "seg_id int, ord1 int, ord2 int, ord3 int, cnt long",
+    )
 
     dicts = searcher.dicts()
     named = triples
@@ -902,11 +560,9 @@ def facet_nested(
     (b) each partial carries Σ doc_len so any algebraic metric merges
     associatively — only touched (pair, cnt, sum) rows shuffle."""
     o1, o2 = f"{f1}_ord", f"{f2}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    pair_schema = "seg_id int, ord1 int, ord2 int, cnt long, sum_dl long"
 
-    def count_pairs(seg_id: int, hits: np.ndarray | None,
-                    a: np.ndarray, b: np.ndarray, dl: np.ndarray) -> pd.DataFrame:
+    def count_pairs(seg_id, dm, hits, live) -> pd.DataFrame:
+        a, b, dl = (dm[c].to_numpy(np.int64) for c in (o1, o2, "doc_len"))
         if hits is not None:
             a, b, dl = a[hits], b[hits], dl[hits]
         m = a >= 0  # keep ord2 == -1: counts toward the parent bucket
@@ -932,103 +588,10 @@ def facet_nested(
             "sum_dl": sums.astype(np.int64),
         })
 
-    from lucene_solr_spark.query.executor import apply_deletes, filter_cols, filter_mask
-
-    dm_base = ["doc_ord", "doc_len", o1, o2]
-    has_deletes = bool(searcher.deleted_keys)
-    deleted_bc = searcher._deleted_bc
-
-    if spec is None:
-        seg_df = searcher.seg_driver()
-
-        def run_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            cols = ["doc_len", o1, o2] + (
-                ["conv_id", "turn_idx"] if has_deletes else []
-            )
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=cols
-            ).to_pandas()
-            live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
-            hits = None if live is None else np.flatnonzero(live)
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy().astype(np.int64),
-                dm[o2].to_numpy().astype(np.int64),
-                dm["doc_len"].to_numpy().astype(np.int64),
-            )
-
-        pairs = seg_df.groupBy("seg_id").applyInPandas(run_all, pair_schema)
-    elif (ds_bc := searcher._docset_cached_bc(spec)) is not None:
-        # queryResultCache hit: bits replace match_segment; only the
-        # ord pair + the metric column are read
-        def run_cached(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            bits, n = ds_bc.get(seg_id)
-            hits = np.flatnonzero(np.unpackbits(
-                np.frombuffer(bits, np.uint8), count=n
-            ))
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet",
-                columns=["doc_len", o1, o2],
-            ).to_pandas()
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-                dm["doc_len"].to_numpy(np.int64),
-            )
-
-        pairs = searcher.seg_driver().groupBy("seg_id").applyInPandas(
-            run_cached, pair_schema
-        )
-    else:
-        lookup = list(spec.lookup_terms)
-        pure_negative = not spec.scoring_terms
-        dm_cols = filter_cols(spec, dm_base)
-        if has_deletes:
-            dm_cols += [c for c in ("conv_id", "turn_idx") if c not in dm_cols]
-
-        def run_hits(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(
-                filter_mask(dm, spec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(spec),
-                    ).to_pandas()
-                    term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            hits = match_segment(
-                spec, term_rows, len(dm), allowed,
-                int(dm["doc_len"].max()) if len(dm) else 0,
-            )
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-                dm["doc_len"].to_numpy(np.int64),
-            )
-
-        driver = (
-            searcher.seg_driver() if pure_negative
-            else searcher.postings().filter(F.col("term").isin(lookup))
-        )
-        pairs = driver.groupBy("seg_id").applyInPandas(run_hits, pair_schema)
+    pairs = segment_domain(
+        searcher, spec, ["doc_len", o1, o2], count_pairs,
+        "seg_id int, ord1 int, ord2 int, cnt long, sum_dl long",
+    )
 
     d1 = searcher.dicts().filter(F.col("field") == f1).select(
         "seg_id", F.col("term_ord").alias("ord1"), F.col("term").alias("v1")
@@ -1235,52 +798,15 @@ def facet_relatedness(
     ref: solr/core/src/java/org/apache/solr/search/facet/RelatednessAgg.java
          (computeRelatedness; fg/bg set comparison per bucket)
     """
-    from lucene_solr_spark.query.executor import (
-        apply_deletes,
-        filter_cols,
-        filter_mask,
-    )
-
-    if fg_spec.needs_rewrite:
-        fg_spec = searcher.rewrite(fg_spec)
     ord_col = f"{field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    deleted_bc = searcher._deleted_bc
-    has_deletes = bool(searcher.deleted_keys)
-    lookup = list(fg_spec.lookup_terms)
-    dm_cols = filter_cols(fg_spec, ["doc_ord", "doc_len", ord_col])
-    if has_deletes:
-        dm_cols += [c for c in ("conv_id", "turn_idx") if c not in dm_cols]
-    lspec = fg_spec
 
-    def run_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()
-        n_docs = len(dm)
+    def count_fg_bg(seg_id, dm, hits, live) -> pd.DataFrame:
         ords = dm[ord_col].to_numpy(np.int64)
-        live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
-        if live is None:
-            bg_ords, bg_size = ords, n_docs
+        lv = live()
+        if lv is None:
+            bg_ords, bg_size = ords, len(dm)
         else:
-            bg_ords, bg_size = ords[live], int(live.sum())
-        allowed = apply_deletes(
-            filter_mask(dm, lspec), dm,
-            deleted_bc.value if deleted_bc else None,
-        )
-        term_rows = {}
-        if lookup:
-            post_tbl = pq.read_table(
-                f"{seg_dirs[seg_id]}/postings.parquet",
-                filters=[("term", "in", lookup)],
-                columns=postings_task_columns(lspec),
-            ).to_pandas()
-            term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-        max_dl = int(dm["doc_len"].max()) if n_docs else 0
-        hits = match_segment(lspec, term_rows, n_docs, allowed, max_dl)
+            bg_ords, bg_size = ords[lv], int(lv.sum())
         fg_ords = ords[hits]
         fg_size = int(len(hits))
         # one sparse pass over each domain's touched ordinals
@@ -1305,8 +831,10 @@ def facet_relatedness(
             }
         )
 
-    partials = searcher.seg_driver().groupBy("seg_id").applyInPandas(
-        run_seg, RELATEDNESS_PARTIAL_SCHEMA
+    # every segment: ones with zero fg hits still carry bg counts
+    partials = segment_domain(
+        searcher, fg_spec, [ord_col], count_fg_bg, RELATEDNESS_PARTIAL_SCHEMA,
+        every_segment=True,
     )
     partials = partials.persist()
     sizes = (
@@ -1362,56 +890,15 @@ def facet_block_domain(
     ref: solr/core/src/java/org/apache/solr/search/facet/FacetRequest.java
          (Domain.toChildren / BlockJoinChildQParser domain changes)
     """
-    from lucene_solr_spark.query.executor import (
-        apply_deletes,
-        filter_cols,
-        filter_mask,
-    )
-
-    if spec.needs_rewrite:
-        spec = searcher.rewrite(spec)
     ord_col = f"{field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    deleted_bc = searcher._deleted_bc
-    lookup = list(spec.lookup_terms)
-    pure_negative = not spec.scoring_terms
-    base = ["doc_ord", "doc_len", ord_col, "conv_id"]
-    dm_cols = filter_cols(spec, base)
-    if "turn_idx" not in dm_cols and bool(searcher.deleted_keys):
-        dm_cols.append("turn_idx")
-    lspec = spec
 
-    def run_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()
-        n_docs = len(dm)
-        allowed = apply_deletes(
-            filter_mask(dm, lspec), dm,
-            deleted_bc.value if deleted_bc else None,
-        )
-        if pure_negative:
-            term_rows = {}
-            if lookup:
-                post_tbl = pq.read_table(
-                    f"{seg_dirs[seg_id]}/postings.parquet",
-                    filters=[("term", "in", lookup)],
-                    columns=postings_task_columns(lspec),
-                ).to_pandas()
-                term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-        else:
-            term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-        max_dl = int(dm["doc_len"].max()) if n_docs else 0
-        hits = match_segment(lspec, term_rows, n_docs, allowed, max_dl)
+    def count_children(seg_id, dm, hits, live) -> pd.DataFrame:
         convs = dm["conv_id"].to_numpy()
         # widen: every live doc whose conversation contains a hit
         in_block = np.isin(convs, np.unique(convs[hits]))
-        live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
-        if live is not None:
-            in_block &= live
+        lv = live()
+        if lv is not None:
+            in_block &= lv
         ords = dm[ord_col].to_numpy(np.int64)[in_block]
         uniq, cnt = np.unique(ords[ords >= 0], return_counts=True)
         return pd.DataFrame(
@@ -1422,12 +909,8 @@ def facet_block_domain(
             }
         )
 
-    driver = (
-        searcher.seg_driver() if pure_negative
-        else searcher.postings().filter(F.col("term").isin(lookup))
-    )
-    partials = driver.groupBy("seg_id").applyInPandas(
-        run_seg, PARTIAL_SCHEMA
+    partials = segment_domain(
+        searcher, spec, [ord_col, "conv_id"], count_children, PARTIAL_SCHEMA
     )
     named = _with_terms(searcher, partials, field)
     return (
@@ -1463,58 +946,11 @@ def facet_unique_block(
     ref: solr/core/src/java/org/apache/solr/search/facet/UniqueBlockAgg.java
          (unique parent counting riding the child-domain terms facet)
     """
-    from lucene_solr_spark.query.executor import (
-        apply_deletes,
-        filter_cols,
-        filter_mask,
-    )
-
-    if spec is not None and spec.needs_rewrite:
-        spec = searcher.rewrite(spec)
     ord_col = f"{field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    deleted_bc = searcher._deleted_bc
-    lookup = list(spec.lookup_terms) if spec is not None else []
-    pure_negative = spec is not None and not spec.scoring_terms
-    base = ["doc_ord", "doc_len", ord_col, "conv_id"]
-    dm_cols = filter_cols(spec, base) if spec is not None else list(base)
-    if "turn_idx" not in dm_cols and bool(searcher.deleted_keys):
-        dm_cols.append("turn_idx")
-    lspec = spec
 
-    def run_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()
-        n_docs = len(dm)
+    def count_blocks(seg_id, dm, hits, live) -> pd.DataFrame:
         ords = dm[ord_col].to_numpy(np.int64)
         convs = dm["conv_id"].to_numpy()
-        if lspec is None:
-            live = apply_deletes(
-                None, dm, deleted_bc.value if deleted_bc else None
-            )
-            hits = None if live is None else np.flatnonzero(live)
-        else:
-            allowed = apply_deletes(
-                filter_mask(dm, lspec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(lspec),
-                    ).to_pandas()
-                    term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            max_dl = int(dm["doc_len"].max()) if n_docs else 0
-            hits = match_segment(lspec, term_rows, n_docs, allowed, max_dl)
         if hits is not None:
             ords, convs = ords[hits], convs[hits]
         keep = ords >= 0
@@ -1537,12 +973,9 @@ def facet_unique_block(
             }
         )
 
-    driver = (
-        searcher.seg_driver() if (spec is None or pure_negative)
-        else searcher.postings().filter(F.col("term").isin(lookup))
-    )
-    partials = driver.groupBy("seg_id").applyInPandas(
-        run_seg, UNIQUE_BLOCK_PARTIAL_SCHEMA
+    partials = segment_domain(
+        searcher, spec, [ord_col, "conv_id"], count_blocks,
+        UNIQUE_BLOCK_PARTIAL_SCHEMA,
     )
     named = _with_terms(searcher, partials, field)
     return (
@@ -1576,54 +1009,15 @@ def facet_block_parent(
     ref: solr/core/src/java/org/apache/solr/search/facet/FacetRequest.java
          (Domain.toParent / BlockJoinParentQParser domain changes)
     """
-    from lucene_solr_spark.query.executor import (
-        apply_deletes,
-        filter_cols,
-        filter_mask,
-    )
-
-    if spec.needs_rewrite:
-        spec = searcher.rewrite(spec)
     ord_col = f"{field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    deleted_bc = searcher._deleted_bc
-    lookup = list(spec.lookup_terms)
-    pure_negative = not spec.scoring_terms
-    base = ["doc_ord", "doc_len", ord_col, "conv_id", "turn_idx"]
-    dm_cols = filter_cols(spec, base)
-    lspec = spec
 
-    def run_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()
-        n_docs = len(dm)
-        allowed = apply_deletes(
-            filter_mask(dm, lspec), dm,
-            deleted_bc.value if deleted_bc else None,
-        )
-        if pure_negative:
-            term_rows = {}
-            if lookup:
-                post_tbl = pq.read_table(
-                    f"{seg_dirs[seg_id]}/postings.parquet",
-                    filters=[("term", "in", lookup)],
-                    columns=postings_task_columns(lspec),
-                ).to_pandas()
-                term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-        else:
-            term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-        max_dl = int(dm["doc_len"].max()) if n_docs else 0
-        hits = match_segment(lspec, term_rows, n_docs, allowed, max_dl)
+    def count_parents(seg_id, dm, hits, live) -> pd.DataFrame:
         convs = dm["conv_id"].to_numpy()
         # toParent: parent rows (turn 0, live) of conversations with a hit
         parents = dm["turn_idx"].to_numpy(np.int64) == 0
-        live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
-        if live is not None:
-            parents &= live
+        lv = live()
+        if lv is not None:
+            parents &= lv
         parents &= np.isin(convs, np.unique(convs[hits]))
         ords = dm[ord_col].to_numpy(np.int64)[parents]
         uniq, cnt = np.unique(ords[ords >= 0], return_counts=True)
@@ -1635,12 +1029,9 @@ def facet_block_parent(
             }
         )
 
-    driver = (
-        searcher.seg_driver() if pure_negative
-        else searcher.postings().filter(F.col("term").isin(lookup))
-    )
-    partials = driver.groupBy("seg_id").applyInPandas(
-        run_seg, PARTIAL_SCHEMA
+    partials = segment_domain(
+        searcher, spec, [ord_col, "conv_id", "turn_idx"], count_parents,
+        PARTIAL_SCHEMA,
     )
     named = _with_terms(searcher, partials, field)
     return (

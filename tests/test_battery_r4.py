@@ -1210,6 +1210,49 @@ def test_select_handler_multiselect_tag_ex(spark, sf_dir):
                              "facet.field": "{!ex=b}role"})
 
 
+def test_select_handler_ex_of_only_constraint_is_match_all(spark, sf_dir):
+    """{!ex} removing the ONLY constraint of a q.alt=*:* request leaves
+    a MatchAllDocs domain: every leg equals the same request with the
+    fq removed (pivot, nested json.facet, facet.range and a json.facet
+    domain.filter)."""
+    import json as _json
+
+    from lucene_solr_spark.handler import select
+    from lucene_solr_spark.registry import cached_searcher
+
+    s = cached_searcher(spark, sf_dir)
+    base = {"defType": "edismax", "q.alt": "*:*", "rows": 0,
+            "fq": "{!tag=r}role:user"}
+    no_fq = {k: v for k, v in base.items() if k != "fq"}
+
+    def jf(domain, **extra):
+        f = {"type": "terms", "field": "tool", "limit": 3, **extra}
+        if domain:
+            f["domain"] = domain
+        return {"json.facet": _json.dumps({"f": f})}
+
+    nested = {"facet": {"t": {"type": "terms", "field": "role",
+                              "limit": 2}}}
+    rng = {"facet.range.start": 0, "facet.range.end": 10,
+           "facet.range.gap": 5}
+    legs = [
+        ("facet_pivots", "role,tool", {"facet.pivot": "{!ex=r}role,tool"},
+         {"facet.pivot": "role,tool"}),
+        ("facets", "f", jf({"excludeTags": "r"}, **nested), jf(None, **nested)),
+        ("facet_ranges", "turn_idx",
+         {"facet.range": "{!ex=r}turn_idx", **rng},
+         {"facet.range": "turn_idx", **rng}),
+        ("facets", "f",
+         jf({"excludeTags": "r", "filter": "role:assistant"}),
+         jf({"filter": "role:assistant"})),
+    ]
+    for section, key, ex_leg, plain_leg in legs:
+        got = select(s, {**base, **ex_leg})[section][key].collect()
+        want = select(s, {**no_fq, **plain_leg})[section][key].collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want)), ex_leg
+        assert got, ex_leg
+
+
 def test_update_stream_dest_stats_are_subset_only(spark, sf_dir):
     """UpdateStream contract: the destination collection's stats come
     ONLY from the streamed tuples — n_docs equals the source DocSet

@@ -246,3 +246,105 @@ def test_r4_read_paths_honor_tombstones(spark, idx):
         after, "role", BooleanSpec(must=("merge",)), limit=20
     ).collect()
     assert all(r.facet_value != "user" for r in wide)
+
+
+def _entry_points(s, spec):
+    """Every segment_domain entry point over ``spec`` as sorted rows."""
+    from lucene_solr_spark.query import facets as fc
+
+    calls = {
+        "docset": lambda: s.docset(spec),
+        "docset_matchall": lambda: s.docset(None),
+        "facet_field": lambda: s.facet("tool", spec=spec, limit=50),
+        "facet_field_matchall": lambda: s.facet("tool", limit=50),
+        "facet_metrics": lambda: fc.facet_metrics(
+            s, "role", spec=spec,
+            aggs=(("avg", "doc_len"), ("max", "doc_len"))),
+        "facet_pivot": lambda: fc.facet_pivot(
+            s, "role", "tool", spec=spec, limit1=4, limit2=50),
+        "facet_pivot3": lambda: fc.facet_pivot3(
+            s, "role", "tool", "ftok", spec=spec, limit1=4, limit2=5,
+            limit3=5),
+        "facet_nested": lambda: fc.facet_nested(
+            s, "role", "tool", spec=spec, limit1=4, limit2=50),
+        "facet_relatedness": lambda: fc.facet_relatedness(
+            s, "tool", spec, limit=50),
+        "facet_block_domain": lambda: fc.facet_block_domain(
+            s, "tool", spec, limit=50),
+        "facet_unique_block": lambda: fc.facet_unique_block(
+            s, "tool", spec, limit=50),
+        "facet_block_parent": lambda: fc.facet_block_parent(
+            s, "tool", spec, limit=50),
+    }
+    return {n: sorted(tuple(r) for r in f().collect())
+            for n, f in calls.items()}
+
+
+def test_segment_domain_tombstone_parity(spark, sf_dir, idx, tmp_path):
+    """Tombstoned docs are invisible to every per-segment match/facet
+    entry point: after delete_by_query(role:user) each one answers
+    exactly like an index built without those rows — cold, and on a
+    queryResultCache hit."""
+    from pyspark.sql import functions as F
+
+    user = BooleanSpec(filters=(("role", "user"),))
+    assert delete_by_query(spark, idx, user) > 0
+    deleted = IndexSearcher(spark, idx)
+    root = str(tmp_path / "without_user")
+    t = transcripts_from_documents(spark, sf_dir)
+    build_index(spark, t.filter(~F.col("role").eqNullSafe("user")), root,
+                num_parts=3, lineage_source=sf_dir)
+    rebuilt = IndexSearcher(spark, root)
+    assert rebuilt.docmap().count() == deleted.docmap().count()
+
+    for spec in (Q_MERGE, BooleanSpec(must_not=("merge",))):
+        want = _entry_points(rebuilt, spec)
+        assert all(want.values()), spec
+        assert _entry_points(deleted, spec) == want, spec
+    deleted.cache_docset(Q_MERGE)  # hits served from the cached bits
+    assert _entry_points(deleted, Q_MERGE) == _entry_points(rebuilt, Q_MERGE)
+
+
+def _calls_by_function(path) -> list[tuple[str, tuple[str, ...]]]:
+    """(called name, enclosing function names) for every call."""
+    import ast
+
+    out = []
+
+    def walk(node, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = scope + (node.name,)
+        if isinstance(node, ast.Call):
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(
+                fn, "id", None)
+            if isinstance(fn, ast.Attribute) and isinstance(
+                    fn.value, ast.Name) and fn.value.id == "pq":
+                name = f"pq.{fn.attr}"
+            out.append((name, scope))
+        for child in ast.iter_child_nodes(node):
+            walk(child, scope)
+
+    walk(ast.parse(path.read_text(), filename=str(path)), ())
+    return out
+
+
+def test_segment_reads_go_through_segment_domain():
+    """The liveDocs rule is enforced by code: facets never read a
+    docmap, apply a mask or match a segment themselves, and the
+    executor matches segments only inside segment_domain (and
+    significant_terms, whose kernel needs every term row)."""
+    from pathlib import Path
+
+    query = Path(__file__).resolve().parents[1] / "lucene_solr_spark" / "query"
+    banned = {"pq.read_table", "apply_deletes", "filter_mask",
+              "match_segment"}
+    facets = [n for n, _ in _calls_by_function(query / "facets.py")
+              if n in banned]
+    assert facets == [], f"facets.py must go through segment_domain: {facets}"
+    stray = [
+        scope for n, scope in _calls_by_function(query / "executor.py")
+        if n == "match_segment"
+        and not {"segment_domain", "significant_terms"} & set(scope)
+    ]
+    assert stray == [], f"match_segment outside segment_domain: {stray}"

@@ -135,19 +135,30 @@ def test_cached_docset_facet_metrics_identical(searcher):
 
 
 def test_cached_docset_pivot_and_nested_identical(searcher):
-    """facet_pivot and facet_nested consume the cached bits too —
-    identical output either way."""
-    from lucene_solr_spark.query.facets import facet_nested, facet_pivot
+    """facet_pivot, facet_pivot3, facet_nested, the block-join domain
+    facets and relatedness consume the cached bits too — identical
+    output either way."""
+    from lucene_solr_spark.query import facets as fc
 
     spec = SPECS[0]
-    cold_p = [tuple(r) for r in facet_pivot(
-        searcher, "role", "tool", spec=spec, limit1=3, limit2=2).collect()]
-    cold_n = [tuple(r) for r in facet_nested(
-        searcher, "role", "tool", spec=spec, limit1=3, limit2=2).collect()]
+    runs = {
+        "pivot": lambda: fc.facet_pivot(
+            searcher, "role", "tool", spec=spec, limit1=3, limit2=2),
+        "nested": lambda: fc.facet_nested(
+            searcher, "role", "tool", spec=spec, limit1=3, limit2=2),
+        "pivot3": lambda: fc.facet_pivot3(
+            searcher, "role", "tool", "ftok", spec=spec),
+        "block_domain": lambda: fc.facet_block_domain(
+            searcher, "tool", spec),
+        "unique_block": lambda: fc.facet_unique_block(
+            searcher, "tool", spec),
+        "block_parent": lambda: fc.facet_block_parent(
+            searcher, "tool", spec),
+        "relatedness": lambda: fc.facet_relatedness(
+            searcher, "tool", spec),
+    }
+    cold = {n: [tuple(r) for r in f().collect()] for n, f in runs.items()}
     searcher.cache_docset(spec)
-    warm_p = [tuple(r) for r in facet_pivot(
-        searcher, "role", "tool", spec=spec, limit1=3, limit2=2).collect()]
-    warm_n = [tuple(r) for r in facet_nested(
-        searcher, "role", "tool", spec=spec, limit1=3, limit2=2).collect()]
-    assert cold_p == warm_p and cold_p
-    assert cold_n == warm_n and cold_n
+    warm = {n: [tuple(r) for r in f().collect()] for n, f in runs.items()}
+    for n in runs:
+        assert cold[n] == warm[n] and cold[n], n
